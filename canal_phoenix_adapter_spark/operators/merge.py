@@ -102,13 +102,6 @@ def _key_changed_sql(
     return "(" + (" OR ".join(terms) or "false") + ")"
 
 
-def key_changed_expr(
-    columns: list[str], pk: list[str], old_prefix: str = "old_"
-) -> F.Column:
-    """Column form of _key_changed_sql (one definition — see _bq)."""
-    return F.expr(_key_changed_sql(columns, pk, old_prefix))
-
-
 def _key_entries_sql(
     columns: list[str], pk: list[str], op_col: str, old_prefix: str,
     field_prefix: str, with_create_flag: bool,

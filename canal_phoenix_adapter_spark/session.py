@@ -20,6 +20,26 @@ from pyspark.sql import SparkSession
 
 logger = logging.getLogger(__name__)
 
+# Runtime SQL settings of a session get_spark builds (never applied to a
+# session it did not build). canChangeCachedPlanOutputPartitioning lets
+# AQE coalesce a persisted plan's output like any other shuffle; Spark's
+# default pins every cached intermediate at spark.sql.shuffle.partitions,
+# so each read of a cache over a few thousand rows is that many tiny
+# tasks. No operator's output depends on partition count; a consumer
+# that relied on the cache's hash partitioning may plan one more Exchange.
+SQL_CONF: dict[str, str] = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+    "spark.sql.autoBroadcastJoinThreshold": "64m",
+    # default 100 silently drops >100-field operators out of whole-
+    # stage codegen: simhash128's 129-field aggregate, unfused at r12
+    "spark.sql.codegen.maxFields": "160",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.files.maxPartitionBytes": "128m",
+}
+
 
 def get_spark(app_name: str = "canal-phoenix-adapter-spark",
               cpus: int | None = None,
@@ -63,15 +83,7 @@ def get_spark(app_name: str = "canal-phoenix-adapter-spark",
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        # default 100 silently drops >100-field operators out of whole-
-        # stage codegen: simhash128's 129-field aggregate, unfused at r12
-        .config("spark.sql.codegen.maxFields", "160")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.files.maxPartitionBytes", "128m")
+        .config(map=SQL_CONF)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .getOrCreate()

@@ -281,3 +281,33 @@ def test_get_spark_warns_when_explicit_args_dropped(spark, caplog):
     with caplog.at_level("WARNING", "canal_phoenix_adapter_spark.session"):
         assert get_spark() is spark  # all-default call stays silent
     assert not caplog.records
+
+
+def test_engine_session_lets_aqe_size_persisted_intermediates(spark):
+    # Spark's default pins a cached plan's output at
+    # spark.sql.shuffle.partitions, so every read of a persisted
+    # few-doc intermediate would be 32 tiny tasks. The suite's session
+    # is not built by get_spark, so the test applies get_spark's runtime
+    # SQL settings (and its minimum shuffle width) and restores them.
+    from canal_phoenix_adapter_spark.operators import dedup
+    from canal_phoenix_adapter_spark.session import SQL_CONF
+
+    conf = {**SQL_CONF, "spark.sql.shuffle.partitions": "32"}
+    saved = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        docs = spark.createDataFrame(
+            [(i, f"document {i} about topic {i % 3} and more words")
+             for i in range(6)],
+            "doc_id long, text string",
+        )
+        buckets = dedup.minhash_band_buckets(docs, "doc_id", "text").persist()
+        try:
+            assert buckets.count() == 6 * 4
+            assert buckets.rdd.getNumPartitions() < 32
+        finally:
+            buckets.unpersist()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

@@ -549,8 +549,8 @@ def test_simhash128_aggregate_stays_in_codegen(spark, sf_dir):
     from plan_helpers import explain_str
 
     # (a) the engine's session builder ships the raised limit
-    src = inspect.getsource(session_mod.get_spark)
-    assert '"spark.sql.codegen.maxFields", "160"' in src
+    assert session_mod.SQL_CONF["spark.sql.codegen.maxFields"] == "160"
+    assert "SQL_CONF" in inspect.getsource(session_mod.get_spark)
     # (b) with that limit, every width's aggregate fuses (the conftest
     # session is deliberately driver-default, so set it here)
     old = {
