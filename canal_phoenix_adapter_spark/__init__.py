@@ -1,13 +1,16 @@
 """canal_phoenix_adapter_spark — a PySpark-native CDC apply + ETL engine.
 
 Re-expresses the capabilities of wenjunxiao/canal-phoenix-adapter
-(a Canal->Phoenix CDC apply engine + batch backfill tool, reference at
-/root/reference) in idiomatic Spark DataFrame / Structured Streaming
-terms, plus large-scale training-data-pipeline extensions (dedup,
-similarity search, text analysis, multimodal plumbing).
+(a Canal->Phoenix CDC apply engine + batch backfill tool) in idiomatic
+Spark DataFrame / Structured Streaming terms, plus large-scale
+training-data-pipeline extensions (dedup, similarity search, text
+analysis, multimodal plumbing).
 
 Layout (SURVEY.md §7.0; scale design ledger in SCALE.md):
     config        MappingConfig dataclass + YAML loader     (~ config/*)
+    session       tuned SparkSession factory
+    entry         query registry (gates + DuckDB oracle SQL)
+    jvm_shim      the one private-JVM-API seam (localCheckpoint release)
     monitor       config hot reload (poll watcher)
     notify        HTTP notify hook on schema change
     functions/    column-expression builders: coercion, enums, hashing, skew salting
@@ -15,9 +18,8 @@ Layout (SURVEY.md §7.0; scale design ledger in SCALE.md):
     operators/    transform, merge (CDC apply), etl, schema_sync, asof,
                   dedup, similarity, text, sampling, multimodal, analytics
     sinks/        executor-side Phoenix write loop, lake-layout parquet sink
-    streaming/    Structured Streaming glue, versioned state store
-                  (time travel, change feed, erasure), interval join
-    plans/        physical-plan inspection helpers
+    streaming/    Structured Streaming glue, versioned state stores
+                  (time travel, retention, erasure), direct-to-sink topology
 """
 
 __version__ = "0.1.0"

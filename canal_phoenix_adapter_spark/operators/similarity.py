@@ -217,31 +217,6 @@ def lsh_bucket_expr(
     return F.expr(f"CAST({' + '.join(bits)} AS BIGINT)")
 
 
-def lsh_hyperplane_buckets(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_planes: int = 8,
-    dim: int | None = None,
-) -> DataFrame:
-    """Random-hyperplane LSH: bucket = bit-string of sign(v . plane_j).
-    Output (id, bucket bigint). Vectors in the same bucket are ANN
-    candidates; expected collision rate falls with angle.
-
-    ``dim`` is required: the caller knows the embedding width (it is
-    pipeline config, like the model that produced the vectors), and an
-    automatic probe would run a Spark action during plan construction."""
-    if dim is None:
-        raise ValueError(
-            "lsh_hyperplane_buckets requires dim (embedding width); "
-            "pass it from pipeline config instead of probing the data"
-        )
-    return df.select(
-        F.col(id_col).alias("id"),
-        lsh_bucket_expr(vec_col, num_planes, dim).alias("bucket"),
-    )
-
-
 def ivf_cell_expr(vec_col: str) -> F.Column:
     """Column expression for the IVF-style coarse cell id:
     (argmax-|component| dimension, its sign) — 2*dim inverted lists.
@@ -257,15 +232,6 @@ def ivf_cell_expr(vec_col: str) -> F.Column:
     idx = F.array_position(absv, F.array_max(absv))  # 1-based first max
     signed = F.when(F.element_at(F.col(vec_col), idx.cast("int")) < 0, 1).otherwise(0)
     return (idx * 2 + signed).cast("long")
-
-
-def ivf_cells(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """IVF coarse quantizer as a standalone (id, cell) table."""
-    return df.select(
-        F.col(id_col).alias("id"), ivf_cell_expr(vec_col).alias("cell")
-    )
 
 
 def ann_topk_ivf(

@@ -52,7 +52,7 @@ def main() -> None:
     bench("touched_keys", lambda: touched_keys(changes, ["id"]))
     bench(
         "merge_cdc (no truncate scan)",
-        lambda: merge_cdc(state, changes, ["id"], check_truncate=False),
+        lambda: merge_cdc(state, changes, ["id"], trunc_seq=None),
     )
 
 

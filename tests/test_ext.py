@@ -102,8 +102,9 @@ def test_embedding_near_dup_pairs(spark):
 
 
 def test_lsh_buckets_collide_for_identical(spark):
-    b = {r["id"]: r["bucket"] for r in
-         similarity.lsh_hyperplane_buckets(vec_df(spark), num_planes=4, dim=4).collect()}
+    b = {r["vec_id"]: r["bucket"] for r in vec_df(spark).select(
+        "vec_id", similarity.lsh_bucket_expr("embedding", 4, 4).alias("bucket")
+    ).collect()}
     assert b[0] == b[1]
 
 
@@ -112,8 +113,6 @@ def test_lsh_buckets_require_dim():
     the operator must refuse rather than run a job."""
     import pytest
 
-    with pytest.raises(ValueError, match="dim"):
-        similarity.lsh_hyperplane_buckets(None, num_planes=4)
     with pytest.raises(ValueError, match="dim"):
         similarity.ann_topk_lsh(None)
     with pytest.raises(ValueError, match="dim"):
@@ -560,13 +559,14 @@ def test_simhash_hamming_pairs_rejects_bad_bands():
 
 
 def test_ivf_cells_deterministic_and_signed(spark):
-    from canal_phoenix_adapter_spark.operators.similarity import ivf_cells
+    from canal_phoenix_adapter_spark.operators.similarity import ivf_cell_expr
 
     df = spark.createDataFrame(
         [(0, [0.1, -0.9, 0.2]), (1, [0.1, 0.9, 0.2]), (2, [0.95, 0.1, 0.0])],
         "vec_id bigint, embedding array<float>",
     )
-    cells = {r["id"]: r["cell"] for r in ivf_cells(df).collect()}
+    cells = {r["vec_id"]: r["cell"] for r in
+             df.select("vec_id", ivf_cell_expr("embedding").alias("cell")).collect()}
     # dim index is 1-based; cell = idx*2 + (1 if negative else 0)
     assert cells == {0: 5, 1: 4, 2: 2}
 
